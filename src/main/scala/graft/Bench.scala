@@ -133,7 +133,6 @@ object Bench {
 
   private def mergeCfgFromEnv(): MergeConfig = MergeConfig(
     numBuckets = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUCKETS", "32").toInt,
-    saltFactor = sys.env.getOrElse("SPARK_GRAFT_BENCH_SALT", "0").toInt,
     broadcastThreshold =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BCAST", "200000").toLong)
 
@@ -257,10 +256,6 @@ object Bench {
         val rc = p.waitFor()
         val err = java.nio.file.Files.readAllBytes(errFile.toPath)
         errFile.delete()
-        if (sys.env.contains("GRAFT_MERGE_TIMING"))
-          new String(err, java.nio.charset.StandardCharsets.UTF_8)
-            .linesIterator.filter(_.contains("[merge-timing]"))
-            .foreach(System.err.println)
         out.linesIterator.find(_.startsWith("GRAFT_CHILD")) match {
           case Some(line) if rc == 0 =>
             val kv = line.stripPrefix("GRAFT_CHILD").trim.split(" ")
@@ -303,11 +298,13 @@ object Bench {
       return
     }
 
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val nEvents = sys.env.getOrElse("SPARK_GRAFT_BENCH_EVENTS", "8000000").toLong
     // "all" | "cdc" (skip query phase) | "queries" (skip CDC phase)
     val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_MODE", "all")
+    // the query phase reads the sf tables; the CDC phase generates its feed
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      if (mode == "cdc") "" else sys.error("Bench: set SPARK_GRAFT_SF_DIR to a dataset dir"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val nEvents = sys.env.getOrElse("SPARK_GRAFT_BENCH_EVENTS", "8000000").toLong
     // default to tmpfs when present: CPU-scaling evidence should not be
     // throttled by the single local disk (a real cluster's I/O is spread
     // over many nodes); the work dir is deleted at the end of the run

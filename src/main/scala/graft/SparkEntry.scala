@@ -18,9 +18,12 @@ object SparkEntry {
 
   private def t(dir: String, name: String) = s"$dir/$name.parquet"
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query on the dataset dir named by `SPARK_GRAFT_SF_DIR`
+    * (e.g. the sf0.001 tables); the smoke check expects rows > 0.
+    */
   def entry(spark: SparkSession): DataFrame =
-    queries("cdc_final_state")(spark, "/root/testdata/sf0.001")
+    queries("cdc_final_state")(spark, sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("SparkEntry.entry: set SPARK_GRAFT_SF_DIR to a dataset dir")))
 
   // ---- the events table viewed as a CDC change feed --------------------
   // lsn = event_id (monotonic), key = user, op: 'error' events are deletes,
@@ -186,13 +189,10 @@ object SparkEntry {
     // The tokens array is emitted stringified (tokens_csv) because the
     // driver harness hashes scalar columns; byte-equal raw arrays are
     // verified in the sbt replay suites.
-    // Round 6: the explicit saltFactor=8 is dropped — the round-4/5 plan
-    // audits established that Spark 4's WindowGroupLimit already performs
-    // the map-side partial top-1 the salt existed for, so the salted
-    // two-stage path cost an extra SortAggregate+Exchange per batch for
-    // no skew protection. The salted path keeps its own driver gate
-    // (cdc_dedupe_lww) and the sbt salting-invariance test proves the
-    // result is saltFactor-independent.
+    // The dedupe is the plain row_number window: Spark 4's partial
+    // WindowGroupLimit already reduces a hot key map-side before the
+    // exchange (PLANS.md). cdc_dedupe_lww gates the window on its own and
+    // CdcReplaySpec's hot-key test checks it on every merge plan shape.
     "cdc_final_state" -> ((s, dir) => {
       val table = LakeTable(scratchDir("graft-cdc-q", dir))
       val changes = cdcChanges(s, dir).persist()
@@ -298,9 +298,9 @@ object SparkEntry {
     }),
 
     // The dedupe-by-(doc_id, lsn) window operator on its own (north-rule
-    // shape: row_number over lsn desc), salted two-stage path exercised.
+    // shape: row_number over lsn desc).
     "cdc_dedupe_lww" -> ((s, dir) => {
-      MergeInto.dedupeLatest(cdcChanges(s, dir), saltFactor = 8)
+      MergeInto.dedupeLatest(cdcChanges(s, dir))
         .select("doc_id", "lsn", "op", "source")
         .orderBy("doc_id")
     }),

@@ -27,7 +27,7 @@ final case class Phase(fromLsn: Long, untilLsn: Long,
   * @param numEvents       number of distinct LSNs (0..numEvents-1)
   * @param numKeys         distinct doc_ids
   * @param zipf            Zipf exponent for key choice; 0 = uniform.
-  *                        Hot-key head exercises the salted dedupe path.
+  *                        Hot-key head exercises the dedupe window's skew case.
   * @param deleteFraction  fraction of events with op = D
   * @param dupFraction     fraction of events emitted twice (same (doc_id,
   *                        lsn) — idempotence check)

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.functions.expressions.{CosineSimilarity, DotProduct, HyperplaneBucket, VecNorm}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** SQL-surface registration: expose the engine's functions to
@@ -32,21 +33,24 @@ object Registry {
     ColumnBridge.column(HyperplaneBucket(
       ColumnBridge.expression(v), planes, seed, dim))
 
+  /** Register a fixed-arity native expression for SQL; a call with the
+    * wrong number of arguments fails analysis with Spark's WRONG_NUM_ARGS
+    * error naming the function and the count it takes.
+    */
+  private def registerNative(spark: SparkSession, name: String, arity: Int)(
+      build: Seq[Expression] => Expression): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name,
+      exprs => {
+        if (exprs.length != arity)
+          throw ColumnBridge.wrongNumArgs(name, arity, exprs.length)
+        build(exprs)
+      },
+      "built-in")
+
   def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity",
-      exprs => CosineSimilarity(exprs.head, exprs(1)),
-      "built-in")
-
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      exprs => DotProduct(exprs.head, exprs(1)),
-      "built-in")
-
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_norm",
-      exprs => VecNorm(exprs.head),
-      "built-in")
+    registerNative(spark, "cosine_similarity", 2)(e => CosineSimilarity(e(0), e(1)))
+    registerNative(spark, "vec_dot", 2)(e => DotProduct(e(0), e(1)))
+    registerNative(spark, "vec_norm", 1)(e => VecNorm(e(0)))
 
     // both wrap the Fns kernels so SQL and Column surfaces cannot drift
     // (they HAD drifted: the SQL rolling hash skipped the normalization

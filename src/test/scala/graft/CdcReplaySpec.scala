@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
 
 /** Golden final-state replay: deterministic feed -> engine -> final table
   * must equal the independent in-memory oracle (byte-equal tokens), across
-  * out-of-order feeds, duplicates, deletes, salting levels and replays.
+  * out-of-order feeds, duplicates, deletes, hot keys and replays.
   */
 class CdcReplaySpec extends SparkSpec {
   import spark.implicits._
@@ -62,16 +62,22 @@ class CdcReplaySpec extends SparkSpec {
     assert(got === oracleMap(events))
   }
 
-  test("salting invariance: result independent of saltFactor") {
+  test("hot keys: dedupe window matches oracle on every merge plan shape") {
+    // Zipf 1.1 over 50 keys: the head keys carry most events of each
+    // batch, the skew the window's partial WindowGroupLimit must absorb
     val feed = FeedConfig(numEvents = 8000, numKeys = 50, seed = 7,
       zipf = 1.1, deleteFraction = 0.08, dupFraction = 0.05,
       outOfOrderWindow = 400, eventsPerSegment = 2000)
     val events = ChangeGen.generateLocal(feed)
     val want = oracleMap(events)
-    for (s <- Seq(0, 4, 16)) {
-      val got = asMap(replay(events, tmpDir(s"lake-salt$s"),
-        MergeConfig(numBuckets = 8, saltFactor = s)))
-      assert(got === want, s"saltFactor=$s diverged")
+    val shapes = Seq(
+      "single-task" -> MergeConfig(numBuckets = 8),
+      "broadcast" -> MergeConfig(numBuckets = 8, singleTaskRows = 0L),
+      "shuffle" -> MergeConfig(numBuckets = 8, singleTaskRows = 0L,
+        broadcastThreshold = 0L))
+    for ((shape, cfg) <- shapes) {
+      val got = asMap(replay(events, tmpDir(s"lake-hot-$shape"), cfg))
+      assert(got === want, s"$shape plan diverged")
     }
   }
 

@@ -53,6 +53,15 @@ class ExpressionSpec extends SparkSpec {
     }
   }
 
+  test("SQL call with the wrong argument count names the function and its arity") {
+    Registry.registerAll(spark)
+    vecs.createOrReplaceTempView("vecs")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT vec_dot(a) FROM vecs").collect()
+    }
+    assert(e.getMessage.contains("`vec_dot` requires 2 parameters"), e.getMessage)
+  }
+
   test("registered UDFs: hmac + rolling hash usable from SQL") {
     Registry.registerAll(spark)
     val out = spark.sql(

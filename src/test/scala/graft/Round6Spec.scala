@@ -4,6 +4,7 @@ import graft.changegen.{ChangeGen, FeedConfig, Phase, RawEvent}
 import graft.functions.Fns
 import graft.merge.{MergeConfig, MergeInto}
 import graft.table.LakeTable
+import graft.tools.WritePlans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -113,15 +114,17 @@ class Round6Spec extends SparkSpec {
       deleteFraction = 0.1, dupFraction = 0.05, eventsPerSegment = 1500)
     val events = ChangeGen.generateLocal(feed)
     val segs = events.groupBy(_.seg).toSeq.sortBy(_._1)
-    System.setProperty("graft.merge.explain", "1")
+    // each batch's write plan, delivered by the listener bus after the
+    // write and matched by its staging dir
+    val plans = new WritePlans
+    spark.listenerManager.register(plans)
     try {
       def lastPlan(cfg: MergeConfig, dir: String): String = {
         val table = LakeTable(dir)
-        segs.foreach { case (seg, evs) =>
-          MergeInto.lastWritePlan = None
-          MergeInto.apply(spark, table, batchDf(evs), "cp", seg, cfg)
-        }
-        MergeInto.lastWritePlan.getOrElse(fail("no plan captured"))
+        segs.map { case (seg, evs) =>
+          val r = MergeInto.apply(spark, table, batchDf(evs), "cp", seg, cfg)
+          plans.await(table.stagingDir(r.version))
+        }.last
       }
       // batch 2 merges into an existing table: the single-task rewrite
       // plan (dedupe window + full-outer join + write) must contain no
@@ -132,7 +135,7 @@ class Round6Spec extends SparkSpec {
       val parallel = lastPlan(
         MergeConfig(numBuckets = 4, singleTaskRows = 0L), tmpDir("r6-plan-off"))
       assert(parallel.contains("Exchange"))
-    } finally System.clearProperty("graft.merge.explain"): Unit
+    } finally spark.listenerManager.unregister(plans)
   }
 
   test("cosineWithNorms(vecDot, vecNorm) is bit-identical to cosine") {
