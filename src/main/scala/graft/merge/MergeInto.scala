@@ -142,9 +142,6 @@ object MergeInto {
 
   val TOMBSTONE: String = LakeTable.TOMBSTONE
 
-  private def storedSchema(logical: StructType): StructType =
-    LakeTable.storedSchema(logical)
-
   /** Dedupe a batch to one winning event per doc_id (last-writer-wins by
     * highest lsn): `row_number() over (partition by doc_id order by lsn
     * desc) = 1`. Spark 4 plans it with a map-side partial
@@ -248,11 +245,8 @@ object MergeInto {
     val current = table.currentManifestOpt()
 
     // -- 0. idempotence: replayed batch => no-op ------------------------
-    val ledgerKey = s"$checkpointId/$batchId"
-    current.filter(_.isCommitted(checkpointId, batchId)) match {
-      case Some(m) =>
-        val snap = m.snapshotIdOf(checkpointId, batchId).getOrElse(m.snapshotId)
-        return MergeResult(snap, m.version, Nil, skipped = true)
+    current.flatMap(m => m.committedSnapshot(checkpointId, batchId).map(_ -> m.version)) match {
+      case Some((snap, version)) => return MergeResult(snap, version, Nil, skipped = true)
       case None => ()
     }
 
@@ -274,11 +268,9 @@ object MergeInto {
     // aggregable, <= numBuckets (+1 reject group) result rows. In
     // dead-letter mode the scan runs over the CACHED unfiltered frame with
     // a `_good` flag so the reject count comes out of the same job.
-    val bucketOf: Column => Column =
-      k => pmod(xxhash64(k), lit(numBuckets.toLong)).cast("int")
     val rawStats = cachedBatch.getOrElse(batch)
       .groupBy((if (cachedBatch.isDefined) goodPred else lit(true)).as("_good"),
-        bucketOf(col("doc_id")).as("_bucket"))
+        LakeTable.bucketExpr(numBuckets).as("_bucket"))
       .agg(count(lit(1)).as("n_raw"),
         min("lsn").as("minL"), max("lsn").as("maxL"))
       .collect()
@@ -296,8 +288,8 @@ object MergeInto {
 
     if (touched.isEmpty) {
       // empty batch: still record the ledger entry (exactly-once bookkeeping)
-      return commitManifest(table, current, evolved, numBuckets,
-        Set.empty, Nil, ledgerKey, ledgerRetention = cfg.ledgerRetention)
+      return commitBatch(table, current, evolved, numBuckets,
+        Set.empty, Nil, checkpointId, batchId, cfg.ledgerRetention)
     }
     // conservative broadcast decision: raw count >= deduped count
     val rawRows = batchStats.valuesIterator.map(_._1).sum
@@ -334,8 +326,8 @@ object MergeInto {
 
     // -- 4. read ONLY the touched buckets of the target -----------------
     // (touchedFiles hoisted above the dedupe — see the pruning note there)
-    val storedOld = storedSchema(tableSchema)
-    val storedNew = storedSchema(evolved)
+    val storedOld = LakeTable.storedSchema(tableSchema)
+    val storedNew = LakeTable.storedSchema(evolved)
     // delta files carry multiple versions per key: the target side of the
     // join must be LWW-resolved first or matched keys would fan out
     // (resolution windows ONLY the delta-bearing buckets)
@@ -467,18 +459,13 @@ object MergeInto {
           hasTExpr = coalesce(col("t._has_target"), lit(false)))
       }
 
-    val merged = mergedFlat.withColumn("_bucket", bucketOf(col("doc_id")))
-
     // -- 6. write the merged buckets, KEEPING the _status column in the
     // staged files. Table reads are schema-first (explicit StructType), so
     // the extra column is pruned for free on every later scan; its cost is
     // ~1 dictionary-encoded byte/row once. The column exists to feed the
     // per-bucket status READ-BACK at step 8 (see there for the two
     // riding-the-write designs that were measured and rejected).
-    val bucketIds = touched.toSeq.sorted
-    val nextVersion = current.map(_.version + 1).getOrElse(0L)
-    val staging = table.stagingDir(nextVersion)
-    // a trickle delta batch writes ONE task (one small file per touched
+    // A trickle delta batch writes ONE task (one small file per touched
     // bucket dir) — no point fanning a few thousand rows over N tasks.
     // coalesce(1), not repartition(1, _bucket): a keyed repartition into a
     // single partition is a full extra Exchange (and stage) that moves
@@ -486,19 +473,18 @@ object MergeInto {
     // file content. With deltaSingleTask the input was already coalesced
     // ahead of the dedupe window, so the whole delta batch is ONE
     // exchange-free single-task stage (guide §2.4).
-    val placed =
-      if (deltaSingleTask || mergeSingleTask) merged
-      else if (isDeltaAppend) merged.coalesce(1)
-      else merged.repartition(touched.size.max(1), col("_bucket"))
-    val toWrite = placed.sortWithinPartitions(col("_bucket"), col("doc_id"))
-    toWrite.write.partitionBy("_bucket").mode("overwrite").parquet(staging)
-
-    // -- 7. manifest entries for the staged files, with per-file pruning
-    // stats (rows, lsn min/max) harvested from the parquet FOOTERS —
-    // exact, driver-side, no Spark job. (Rounds 1-4 ran a read-back
-    // aggregation job here to get per-bucket stats; the footers already
-    // hold them per file, finer-grained and free.)
-    val newFiles = table.enumerateStagedWithStats(staging, isDelta = isDeltaAppend)
+    // -- 7. the write returns the manifest entries for the staged files,
+    // with per-file pruning stats (rows, lsn min/max) harvested from the
+    // parquet FOOTERS — exact, driver-side, no Spark job.
+    val bucketIds = touched.toSeq.sorted
+    val nextVersion = current.map(_.version + 1).getOrElse(0L)
+    val staging = table.stagingDir(nextVersion)
+    val newFiles = table.writeBuckets(mergedFlat, nextVersion, numBuckets,
+        isDelta = isDeltaAppend) { bucketed =>
+      if (deltaSingleTask || mergeSingleTask) bucketed
+      else if (isDeltaAppend) bucketed.coalesce(1)
+      else bucketed.repartition(touched.size.max(1), col("_bucket"))
+    }
 
     // -- 8. per-bucket STATUS counts (insert/update/delete/noop/stale)
     // for the lineage metrics — the one thing footers cannot provide.
@@ -590,9 +576,9 @@ object MergeInto {
     // delta append REMOVES nothing: touched = empty keeps every parent
     // file and composeManifests appends the delta entries to their ranges
     try
-      commitManifest(table, current, evolved, numBuckets,
+      commitBatch(table, current, evolved, numBuckets,
         if (isDeltaAppend) Set.empty else touched, newFiles,
-        ledgerKey, finishLineage, cfg.ledgerRetention, snapshotId, nextVersion)
+        checkpointId, batchId, cfg.ledgerRetention, snapshotId, finishLineage)
     catch {
       case commitFailure: Throwable =>
         // the commit path can throw BEFORE finishLineage joins the async
@@ -609,49 +595,31 @@ object MergeInto {
     } finally cachedBatch.foreach(_.unpersist(false))
   }
 
-  private def commitManifest(
+  /** Record (checkpointId, batchId) in the ledger (retention-compacted
+    * into the floor), assemble the next snapshot and CAS-commit it.
+    * `finishLineage` runs after the snapshot's manifest files are written
+    * and immediately BEFORE the CAS — the join point for work overlapped
+    * with composition that must still precede the commit.
+    */
+  private def commitBatch(
       table: LakeTable,
       current: Option[Manifest],
       schema: StructType,
       numBuckets: Int,
       touched: Set[Int],
       newFiles: Seq[FileEntry],
-      ledgerKey: String,
-      /** Finalizes the batch's lineage (awaits the async status read-back
-        * and lands the lineage parquet). Called AFTER manifest composition
-        * and immediately BEFORE the CAS — the join point for work
-        * overlapped with composition that must still precede the commit.
-        */
-      finishLineage: () => Seq[graft.model.LineageRow] = () => Nil,
-      ledgerRetention: Int = 1024,
+      checkpointId: String,
+      batchId: Long,
+      ledgerRetention: Int,
       snapshotId: String = UUID.randomUUID().toString,
-      versionOverride: Long = -1L): MergeResult = {
-    val version =
-      if (versionOverride >= 0) versionOverride
-      else current.map(_.version + 1).getOrElse(0L)
-    val rawLedger =
-      current.map(_.ledger).getOrElse(Map.empty) + (ledgerKey -> snapshotId)
-    val (ledger, floor) = Manifest.compactLedger(rawLedger,
+      finishLineage: () => Seq[graft.model.LineageRow] = () => Nil): MergeResult = {
+    val (ledger, floor) = Manifest.compactLedger(
+      current.map(_.ledger).getOrElse(Map.empty) + (s"$checkpointId/$batchId" -> snapshotId),
       current.map(_.floorBatch).getOrElse(Map.empty), ledgerRetention.max(1))
-    // O(touched ranges + 1) metadata write: untouched ranges carry over
-    // by reference; a no-change commit (empty batch) reuses the parent's
-    // whole manifest list
-    val manifests =
-      if (touched.isEmpty && newFiles.isEmpty && current.exists(_.manifests.nonEmpty))
-        current.get.manifests
-      else table.composeManifests(current, touched, newFiles, numBuckets)
-    val m = Manifest(
-      version = version,
-      snapshotId = snapshotId,
-      parentSnapshotId = current.map(_.snapshotId),
-      schemaJson = schema.json,
-      numBuckets = numBuckets,
-      files = Nil,
-      ledger = ledger,
-      floorBatch = floor,
-      manifests = manifests)
+    val m = table.nextSnapshot(current, schema.json, numBuckets, touched, newFiles,
+      ledger, floor, snapshotId)
     val lineage = finishLineage()
     table.commit(m)
-    MergeResult(snapshotId, version, lineage, skipped = false)
+    MergeResult(snapshotId, m.version, lineage, skipped = false)
   }
 }

@@ -92,6 +92,13 @@ object Dedup {
     * |intersection| / |union| >= threshold. The shuffle key is the
     * shingle; document pairs never materialize unless they share content.
     *
+    * "Exact" holds up to 64-bit hash collisions: the self-join runs on
+    * 64-bit xxhash64 shingle hashes, not on the shingle strings, so two
+    * distinct shingles that hash alike count as one. Among n distinct
+    * shingles the expected number of colliding pairs is ~n²/2⁶⁵
+    * (birthday bound; ~3·10⁻⁸ at n = 10⁶), so at any practical corpus
+    * size the scores equal the string-level ones.
+    *
     * Round-6 shape (guide §2.3/§4): the join key is the 64-bit
     * [[Fns.shingleHashes]] of the shingle — 8 bytes per joined row
     * instead of a w-word string, and one tight-loop UDF per document

@@ -37,10 +37,9 @@ object StreamOps {
     * streaming analog of the table tombstone) and emit op=D rows so sinks
     * can remove.
     *
-    * `fenceSlackLsns` bounds the state store — BOUNDED BY DEFAULT
-    * ([[DefaultFenceSlackLsns]]): at 10^9+ keys an unbounded store keeps
-    * every key (and every delete fence) forever; a caller who genuinely
-    * wants that must say so via [[lwwStateUnbounded]]. LSNs double as
+    * `fenceSlackLsns` bounds the state store — always, by default at
+    * [[DefaultFenceSlackLsns]]: at 10^9+ keys an unbounded store would
+    * keep every key (and every delete fence) forever. LSNs double as
     * event time (1 LSN = 1 second) under a watermark of `fenceSlackLsns`,
     * and a key evicts once the feed has advanced `2 x slack` LSNs past the
     * key's last write: the streaming analog of the table's tombstone
@@ -53,19 +52,9 @@ object StreamOps {
     * idle stream evicts nothing (no silent fence loss during an outage).
     */
   def lwwState(events: Dataset[ChangeEvent],
-      fenceSlackLsns: Long = DefaultFenceSlackLsns): Dataset[ChangeEvent] =
-    lwwStateImpl(events, Some(fenceSlackLsns))
-
-  /** Explicit opt-out of state eviction: exact LWW over ALL keys ever
-    * seen. State grows with distinct-key count — only for feeds whose key
-    * universe is known to be bounded.
-    */
-  def lwwStateUnbounded(events: Dataset[ChangeEvent]): Dataset[ChangeEvent] =
-    lwwStateImpl(events, None)
-
-  private def lwwStateImpl(events: Dataset[ChangeEvent],
-      fenceSlackLsns: Option[Long]): Dataset[ChangeEvent] = {
+      fenceSlackLsns: Long = DefaultFenceSlackLsns): Dataset[ChangeEvent] = {
     import events.sparkSession.implicits._
+    require(fenceSlackLsns > 0, "fenceSlackLsns must be positive")
 
     def lwwStep(state: GroupState[ChangeEvent], batch: Iterator[ChangeEvent]) = {
       val incoming = batch.reduceOption((a, b) => if (a.lsn >= b.lsn) a else b)
@@ -77,45 +66,34 @@ object StreamOps {
       }
     }
 
-    fenceSlackLsns match {
-      case None =>
-        events
-          .groupByKey(_.doc_id)
-          .flatMapGroupsWithState[ChangeEvent, ChangeEvent](
-            OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-            (_, batch, state) => lwwStep(state, batch)
+    // the watermarked column must reach the stateful operator's input
+    // (dropping it fails Spark's event-time-timeout check), so the
+    // events ride in a wrapper carrying the derived timestamp
+    events
+      .withColumn("_ts", timestamp_seconds(col("lsn")))
+      .withWatermark("_ts", s"$fenceSlackLsns seconds")
+      .as[TimedEvent]
+      .groupByKey(_.doc_id)
+      .flatMapGroupsWithState[ChangeEvent, ChangeEvent](
+        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
+        (_, batch, state) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            val out = lwwStep(state, batch.map(_.event))
+            // evict when the watermark (feed head minus slack) passes
+            // the key's last write by another slack; the max() guard
+            // keeps the target legal when the key is already far
+            // behind the watermark at arrival
+            state.getOption.foreach { s =>
+              state.setTimeoutTimestamp(math.max(
+                (s.lsn + fenceSlackLsns) * 1000L,
+                state.getCurrentWatermarkMs() + 1000L))
+            }
+            out
           }
-      case Some(slack) =>
-        require(slack > 0, "fenceSlackLsns must be positive")
-        // the watermarked column must reach the stateful operator's input
-        // (dropping it fails Spark's event-time-timeout check), so the
-        // events ride in a wrapper carrying the derived timestamp
-        events
-          .withColumn("_ts", timestamp_seconds(col("lsn")))
-          .withWatermark("_ts", s"$slack seconds")
-          .as[TimedEvent]
-          .groupByKey(_.doc_id)
-          .flatMapGroupsWithState[ChangeEvent, ChangeEvent](
-            OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-            (_, batch, state) =>
-              if (state.hasTimedOut) {
-                state.remove()
-                Iterator.empty
-              } else {
-                val out = lwwStep(state, batch.map(_.event))
-                // evict when the watermark (feed head minus slack) passes
-                // the key's last write by another slack; the max() guard
-                // keeps the target legal when the key is already far
-                // behind the watermark at arrival
-                state.getOption.foreach { s =>
-                  state.setTimeoutTimestamp(math.max(
-                    (s.lsn + slack) * 1000L,
-                    state.getCurrentWatermarkMs() + 1000L))
-                }
-                out
-              }
-          }
-    }
+      }
   }
 
   /** [[ChangeEvent]] plus its LSN-derived event-time column (field name

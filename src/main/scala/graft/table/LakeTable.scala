@@ -62,10 +62,8 @@ final case class ManifestFile(files: Seq[FileEntry])
   * batch touched plus this small head document — O(touched ranges + 1)
   * metadata I/O instead of O(all files) — and untouched ranges' manifest
   * files are SHARED across snapshots, so retained time-travel history
-  * costs O(changed ranges), not O(files x snapshots). `files` is the
-  * legacy inline listing (pre-manifest-list snapshots deserialize into
-  * it); list-based snapshots leave it empty and readers go through
-  * `LakeTable.filesOf`.
+  * costs O(changed ranges), not O(files x snapshots). Readers resolve
+  * the listing through `LakeTable.filesOf`.
   *
   * `ledger` maps "checkpointId/batchId" -> snapshotId and makes commits
   * idempotent under streaming replay: re-running a batch that already
@@ -88,22 +86,21 @@ final case class Manifest(
     parentSnapshotId: Option[String],
     schemaJson: String,
     numBuckets: Int,
-    files: Seq[FileEntry],
     ledger: Map[String, String],
     floorBatch: Map[String, Long] = Map.empty,
     manifests: Seq[ManifestRef] = Nil) {
   def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
 
-  /** Was (checkpointId, batchId) already committed? Exact under the
-    * monotonic-batchId invariant; `snapshotIdOf` is only known for
-    * entries still inside the retention window.
+  /** Already-committed snapshot for this (checkpointId, batchId), if any —
+    * the idempotence lookup done at the top of every batch. Exact under
+    * the monotonic-batchId invariant. A batch compacted below the ledger
+    * floor reports THIS snapshot (it is committed; its own snapshot id is
+    * outside the retention window).
     */
-  def isCommitted(checkpointId: String, batchId: Long): Boolean =
-    ledger.contains(s"$checkpointId/$batchId") ||
-      floorBatch.get(checkpointId).exists(batchId <= _)
-
-  def snapshotIdOf(checkpointId: String, batchId: Long): Option[String] =
-    ledger.get(s"$checkpointId/$batchId")
+  def committedSnapshot(checkpointId: String, batchId: Long): Option[String] =
+    ledger.get(s"$checkpointId/$batchId").orElse(
+      if (floorBatch.get(checkpointId).exists(batchId <= _)) Some(snapshotId)
+      else None)
 }
 
 object Manifest {
@@ -168,9 +165,13 @@ final class CommitConflictException(msg: String) extends RuntimeException(msg)
   * commit rewrites one range instead of a multi-MB listing. Bucket space
   * splits into `min(numBuckets, 64)` ranges — fine enough that a
   * 1-bucket commit rewrites ~1/64 of the metadata, coarse enough that a
-  * full-spread batch writes at most 64 small files. Pre-list snapshots
-  * (inline `files`) stay readable; their first post-upgrade commit
-  * migrates them to ranges.
+  * full-spread batch writes at most 64 small files.
+  *
+  * == One write-and-commit path ==
+  * Every writer (merge, compaction, rebucket) stages its data through
+  * [[writeBuckets]] and builds its head through [[nextSnapshot]], so the
+  * bucket hash, the `_bucket=N/` file layout, the footer stats and the
+  * snapshot format exist once, here.
   */
 final class LakeTable private (val root: String, val conf: Configuration) {
 
@@ -256,19 +257,15 @@ final class LakeTable private (val root: String, val conf: Configuration) {
   /** Data files of snapshot `m`, resolved through the manifest list with
     * list-level pruning: when `buckets` is given, only manifest files
     * whose bucket range intersects it are opened (and their entries
-    * filtered). Legacy inline-`files` snapshots resolve directly.
+    * filtered).
     */
   def filesOf(m: Manifest, buckets: Option[Set[Int]] = None): Seq[FileEntry] = {
-    val entries =
-      if (m.manifests.isEmpty) m.files
-      else {
-        val refs = buckets match {
-          case Some(bs) =>
-            m.manifests.filter(r => bs.exists(b => b >= r.minBucket && b <= r.maxBucket))
-          case None => m.manifests
-        }
-        refs.sortBy(_.range).flatMap(readManifestFile)
-      }
+    val refs = buckets match {
+      case Some(bs) =>
+        m.manifests.filter(r => bs.exists(b => b >= r.minBucket && b <= r.maxBucket))
+      case None => m.manifests
+    }
+    val entries = refs.sortBy(_.range).flatMap(readManifestFile)
     buckets match {
       case Some(bs) => entries.filter(f => bs.contains(f.bucket))
       case None => entries
@@ -315,15 +312,16 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     * `touched` buckets (or receiving `newFiles`) are rewritten — their
     * content = parent entries of UNtouched buckets in the range plus the
     * new files — and every other range's manifest file carries over by
-    * reference, untouched and unread. A legacy inline-`files` parent (or
-    * no parent) regroups everything into ranges once.
+    * reference, untouched and unread (nothing touched = the parent's
+    * list as is). With no parent, or a parent under a different bucket
+    * count (a rebucket, where every parent file is superseded), the
+    * list is `newFiles` grouped into ranges from scratch.
     */
   def composeManifests(parent: Option[Manifest], touched: Set[Int],
       newFiles: Seq[FileEntry], numBuckets: Int): Seq[ManifestRef] = {
     fs.mkdirs(metaDir)
     val rng: Int => Int = LakeTable.rangeOf(_, numBuckets)
     val newByRange = newFiles.groupBy(f => rng(f.bucket))
-    val legacy = parent.exists(m => m.manifests.isEmpty && m.files.nonEmpty)
     // manifest files are independent — write them concurrently (a serial
     // loop of N small FS creates is pure latency on the per-batch commit
     // path; measured ~130 ms/commit at 32 ranges on local FS, worse on an
@@ -337,11 +335,9 @@ final class LakeTable private (val root: String, val conf: Configuration) {
           Future(writeManifestFile(r, numBuckets, es))
         }), Duration.Inf)
     }
-    if (parent.isEmpty || legacy) {
-      val all = parent.map(_.files).getOrElse(Nil)
-        .filterNot(f => touched.contains(f.bucket)) ++ newFiles
-      writeAll(all.groupBy(f => rng(f.bucket)).toSeq.sortBy(_._1))
-    } else {
+    if (parent.forall(_.numBuckets != numBuckets))
+      writeAll(newByRange.toSeq.sortBy(_._1))
+    else {
       val parentRefs = parent.get.manifests.map(r => r.range -> r).toMap
       val touchedRanges = touched.map(rng) ++ newByRange.keySet
       val carried = parent.get.manifests.filterNot(r => touchedRanges.contains(r.range))
@@ -354,6 +350,27 @@ final class LakeTable private (val root: String, val conf: Configuration) {
       (carried ++ rewritten).sortBy(_.range)
     }
   }
+
+  /** The snapshot that follows `parent` (None = the table's first):
+    * version parent + 1 (0 for the first), the parent's id, `schemaJson`,
+    * `numBuckets`, the given ledger and floor, and the manifest list
+    * composed from the parent's with the `touched` buckets' files
+    * replaced by `newFiles` ([[composeManifests]]). The manifest files
+    * are written; the head is not — the caller [[commit]]s it.
+    */
+  def nextSnapshot(parent: Option[Manifest], schemaJson: String,
+      numBuckets: Int, touched: Set[Int], newFiles: Seq[FileEntry],
+      ledger: Map[String, String], floorBatch: Map[String, Long],
+      snapshotId: String = UUID.randomUUID().toString): Manifest =
+    Manifest(
+      version = parent.map(_.version + 1).getOrElse(0L),
+      snapshotId = snapshotId,
+      parentSnapshotId = parent.map(_.snapshotId),
+      schemaJson = schemaJson,
+      numBuckets = numBuckets,
+      ledger = ledger,
+      floorBatch = floorBatch,
+      manifests = composeManifests(parent, touched, newFiles, numBuckets))
 
   /** Atomic CAS commit of `m` at `m.version`. Exactly one concurrent caller
     * can commit a given version; losers get [[CommitConflictException]].
@@ -419,17 +436,6 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     } catch { case _: Exception => () }
   }
 
-  /** Already-committed snapshot for this (checkpointId, batchId), if any —
-    * the idempotence lookup done at the top of every foreachBatch. A batch
-    * compacted below the ledger floor reports the CURRENT snapshot (it is
-    * committed; its own snapshot id is outside the retention window).
-    */
-  def committedSnapshot(checkpointId: String, batchId: Long): Option[String] =
-    currentManifestOpt().flatMap { m =>
-      m.snapshotIdOf(checkpointId, batchId)
-        .orElse(if (m.isCommitted(checkpointId, batchId)) Some(m.snapshotId) else None)
-    }
-
   // ---- data files ------------------------------------------------------
 
   /** Directory where a committing snapshot stages its data files. Files are
@@ -439,28 +445,29 @@ final class LakeTable private (val root: String, val conf: Configuration) {
   def stagingDir(version: Long): String =
     new Path(new Path(rootPath, "data"), s"s$version").toString
 
-  /** List the parquet files Spark wrote under `dir/_bucket=N/`, with
-    * per-bucket stats attached to each file.
+  /** Stage the rows of `df` as the data files of snapshot `version`: add
+    * the `_bucket` column ([[LakeTable.bucketExpr]] under `numBuckets`),
+    * let `place` spread the rows over write tasks (identity when the
+    * caller already placed the frame; it sees `_bucket`, so a shuffling
+    * caller keys on it), sort each task by (`_bucket`, `doc_id`), and
+    * overwrite [[stagingDir]]`(version)` partitioned by `_bucket`.
+    * Returns one entry per staged file, with footer stats. The bucket
+    * column goes on BEFORE `place`: a placement under it would put the
+    * bucket projection above the Coalesce/Exchange, one more plan node.
     */
-  def enumerateStaged(dir: String, stats: Map[Int, (Long, Long, Long)],
-      isDelta: Boolean = false): Seq[FileEntry] = {
-    val f = fs
-    val d = new Path(dir)
-    if (!f.exists(d)) return Nil
-    f.listStatus(d).toIndexedSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("_bucket="))
-      .flatMap { bdir =>
-        val bucket = bdir.getPath.getName.stripPrefix("_bucket=").toInt
-        val (rows, minL, maxL) = stats.getOrElse(bucket, (0L, Long.MaxValue, Long.MinValue))
-        f.listStatus(bdir.getPath).toIndexedSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(s => FileEntry(s.getPath.toString, bucket, rows, minL, maxL, isDelta))
-      }
+  def writeBuckets(df: DataFrame, version: Long, numBuckets: Int,
+      isDelta: Boolean = false)(place: DataFrame => DataFrame): Seq[FileEntry] = {
+    val staging = stagingDir(version)
+    place(df.withColumn("_bucket", LakeTable.bucketExpr(numBuckets)))
+      .sortWithinPartitions(col("_bucket"), col("doc_id"))
+      .write.partitionBy("_bucket").mode("overwrite").parquet(staging)
+    enumerateStaged(staging, isDelta)
   }
 
-  /** Enumerate staged files with EXACT per-file (rows, lsn min/max) read
-    * from the parquet FOOTERS — driver-side, parallel, no Spark job. The
-    * footer statistics are what the write itself recorded; harvesting
+  /** The parquet files Spark wrote under `dir/_bucket=N/`, with EXACT
+    * per-file (rows, lsn min/max) read from the parquet FOOTERS —
+    * driver-side, parallel, no Spark job. The footer statistics are
+    * what the write itself recorded; harvesting
     * them costs one small ranged read per file instead of a cluster pass
     * over the staged data (the read-back job this replaces was a fixed
     * per-commit cost on the serial path — the Amdahl term the scaling
@@ -469,17 +476,26 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     * (Long.MinValue/Long.MaxValue) — never the empty-file sentinel, which
     * would let LSN pruning skip live data.
     */
-  def enumerateStagedWithStats(dir: String,
-      isDelta: Boolean = false): Seq[FileEntry] = {
+  private def enumerateStaged(dir: String, isDelta: Boolean): Seq[FileEntry] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val listed = enumerateStaged(dir, Map.empty, isDelta)
+    val f = fs
+    val d = new Path(dir)
+    if (!f.exists(d)) return Nil
+    val listed = f.listStatus(d).toIndexedSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("_bucket="))
+      .flatMap { bdir =>
+        val bucket = bdir.getPath.getName.stripPrefix("_bucket=").toInt
+        f.listStatus(bdir.getPath).toIndexedSeq
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          .map(s => bucket -> s.getPath)
+      }
     Await.result(
-      Future.sequence(listed.map { e =>
+      Future.sequence(listed.map { case (bucket, p) =>
         Future {
-          val (rows, minL, maxL) = footerStats(new Path(e.path))
-          e.copy(rows = rows, minLsn = minL, maxLsn = maxL)
+          val (rows, minL, maxL) = footerStats(p)
+          FileEntry(p.toString, bucket, rows, minL, maxL, isDelta)
         }
       }), Duration.Inf)
   }
@@ -609,11 +625,9 @@ final class LakeTable private (val root: String, val conf: Configuration) {
     */
   def filesInLsnRange(lo: Long, hi: Long): Seq[FileEntry] =
     currentManifestOpt().map { m =>
-      val entries =
-        if (m.manifests.isEmpty) m.files
-        else m.manifests.filter(r => r.maxLsn >= lo && r.minLsn <= hi)
-          .sortBy(_.range).flatMap(readManifestFile)
-      entries.filter(f => f.maxLsn >= lo && f.minLsn <= hi)
+      m.manifests.filter(r => r.maxLsn >= lo && r.minLsn <= hi)
+        .sortBy(_.range).flatMap(readManifestFile)
+        .filter(f => f.maxLsn >= lo && f.minLsn <= hi)
     }.getOrElse(Nil)
 }
 

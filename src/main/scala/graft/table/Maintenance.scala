@@ -4,8 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import java.util.UUID
-
 /** Table maintenance for long-running CDC ingest: bucket compaction,
   * tombstone garbage collection, and orphan-file vacuum. All are
   * snapshot-in/snapshot-out (never mutate referenced files) and commit
@@ -44,71 +42,16 @@ object Maintenance {
       tombstoneWatermark: Long = Long.MinValue,
       buckets: Option[Set[Int]] = None): CompactionResult = {
     val m = table.currentManifest()
-    val stored = LakeTable.storedSchema(m.schema)
-    val nextVersion = m.version + 1
-    val staging = table.stagingDir(nextVersion)
-
     // manifest-LIST pruning: a bucket-subset compaction opens only the
     // ranges it touches; the rest carry over by reference
     val touched = table.filesOf(m, buckets)
-    val filesBefore = m.manifests.map(_.nFiles).sum.max(m.files.size)
     if (touched.isEmpty) {
       // nothing selected: commit nothing, report the no-op
-      return CompactionResult(m.snapshotId, m.version,
-        filesBefore, filesBefore, tombstonesDropped = false)
+      val files = m.manifests.map(_.nFiles).sum
+      return CompactionResult(m.snapshotId, m.version, files, files,
+        tombstonesDropped = false)
     }
-    val touchedBuckets = touched.map(_.bucket).toSet
-    val nTouchedBuckets = touchedBuckets.size
-
-    // merge-on-read deltas fold back into one base file per bucket here:
-    // LWW-resolve multi-version keys FIRST (delta-bearing buckets only),
-    // then the tombstone filter (the resolved winner may be a tombstone —
-    // the key must drop, not fall back to a stale base row).
-    // Size-adaptive single-task plan (same rule as the merge kernel's
-    // MergeConfig.singleTaskRows): when the manifest stats say the touched
-    // buckets fit one task, coalesce BELOW the resolution window so the
-    // whole fold+filter+sort+write is one exchange-free stage instead of
-    // a 2-3 stage job — a maintenance cycle over trickle-sized buckets is
-    // scheduling-floor-bound, not data-bound. Larger selections keep the
-    // parallel repartition.
-    val singleTask = touched.map(_.rows).sum <= LakeTable.SingleTaskRows
-    val df = table.scanResolved(spark, stored, touched, singlePartition = singleTask)
-      .filter(!col(LakeTable.TOMBSTONE) || col("lsn") > tombstoneWatermark)
-      .withColumn("_bucket",
-        pmod(xxhash64(col("doc_id")), lit(m.numBuckets.toLong)).cast("int"))
-
-    val placed =
-      if (singleTask) df
-      else df.repartition(nTouchedBuckets, col("_bucket"))
-    placed
-      .sortWithinPartitions(col("_bucket"), col("doc_id"))
-      .write.partitionBy("_bucket").mode("overwrite").parquet(staging)
-
-    // per-file pruning stats straight from the parquet footers — exact,
-    // driver-side; replaces a second full read of the compacted output
-    // (O(compacted data) per maintenance cycle, purely for stats)
-    val newFiles = table.enumerateStagedWithStats(staging)
-
-    val snapshotId = UUID.randomUUID().toString
-    val manifests =
-      table.composeManifests(Some(m), touchedBuckets, newFiles, m.numBuckets)
-    table.commit(Manifest(
-      version = nextVersion,
-      snapshotId = snapshotId,
-      parentSnapshotId = Some(m.snapshotId),
-      schemaJson = m.schemaJson,
-      numBuckets = m.numBuckets,
-      files = Nil,
-      // carry the ledger floor: after retention has folded old batches into
-      // floorBatch, the floor is the ONLY record that those batches
-      // committed. Dropping it here would let a replayed pre-floor batch
-      // re-apply against a table whose tombstones this compaction just
-      // GC'd — resurrecting deleted keys.
-      ledger = m.ledger,
-      floorBatch = m.floorBatch,
-      manifests = manifests))
-    CompactionResult(snapshotId, nextVersion, filesBefore,
-      manifests.map(_.nFiles).sum, tombstoneWatermark > Long.MinValue)
+    rewrite(spark, table, m, touched, m.numBuckets, Some(tombstoneWatermark))
   }
 
   /** Scale the table's bucket count in place: rewrite the data files under
@@ -126,8 +69,8 @@ object Maintenance {
     * == pmod(h, N)`, so all rows of old bucket `b` land in the k new
     * buckets `{b, b+N, ..., b+(k-1)N}` — each scan task splits its rows
     * locally into at most k output files and the plan needs NO exchange
-    * (the write below deliberately has no repartition; RebucketSpec
-    * asserts the plan is exchange-free on a delta-free table). On a
+    * (the rewrite deliberately has no repartition; RebucketSpec asserts
+    * the written plan is exchange-free on a delta-free table). On a
     * 1000-executor cluster the rewrite is embarrassingly parallel and
     * bounded by scan+write bandwidth, never by shuffle.
     *
@@ -144,41 +87,52 @@ object Maintenance {
     require(newNumBuckets % m.numBuckets == 0,
       s"newNumBuckets must be an integer multiple of ${m.numBuckets} " +
         s"(got $newNumBuckets) — multiples keep the rewrite shuffle-free")
-    val stored = LakeTable.storedSchema(m.schema)
-    val nextVersion = m.version + 1
-    val staging = table.stagingDir(nextVersion)
-    val files = table.filesOf(m)
-    val filesBefore = files.size
-    if (files.nonEmpty) {
-      // coalesce (narrow — the plan stays exchange-free, RebucketSpec's
-      // invariant) to one task when the manifest stats say the whole
-      // table fits it: a small table's rewrite is otherwise fanned over
-      // one task per input file, each paying parquet-writer setup for up
-      // to k output files
-      val singleTask = files.map(_.rows).sum <= LakeTable.SingleTaskRows
-      table.scanResolved(spark, stored, files, singlePartition = singleTask)
-        .withColumn("_bucket",
-          pmod(xxhash64(col("doc_id")), lit(newNumBuckets.toLong)).cast("int"))
-        .sortWithinPartitions(col("_bucket"), col("doc_id"))
-        .write.partitionBy("_bucket").mode("overwrite").parquet(staging)
-    }
-    val newFiles = table.enumerateStagedWithStats(staging)
-    val snapshotId = UUID.randomUUID().toString
-    // every range is rewritten (bucket ids — and the range layout itself —
-    // change), so compose from scratch under the new count
-    val manifests = table.composeManifests(None, Set.empty, newFiles, newNumBuckets)
-    table.commit(Manifest(
-      version = nextVersion,
-      snapshotId = snapshotId,
-      parentSnapshotId = Some(m.snapshotId),
-      schemaJson = m.schemaJson,
-      numBuckets = newNumBuckets,
-      files = Nil,
-      ledger = m.ledger,
-      floorBatch = m.floorBatch,
-      manifests = manifests))
-    CompactionResult(snapshotId, nextVersion, filesBefore,
-      manifests.map(_.nFiles).sum, tombstonesDropped = false)
+    rewrite(spark, table, m, table.filesOf(m), newNumBuckets, None)
+  }
+
+  /** Rewrite `files` of snapshot `m` into one file set per bucket under
+    * `numBuckets` and commit the result as `m`'s successor, carrying the
+    * schema, the ledger and — crucially — the ledger floor: after
+    * retention has folded old batches into `floorBatch`, the floor is the
+    * ONLY record that those batches committed, and dropping it would let
+    * a replayed pre-floor batch re-apply against a table whose tombstones
+    * a compaction just GC'd, resurrecting deleted keys.
+    *
+    * Merge-on-read deltas fold back into base files here: LWW-resolve
+    * multi-version keys FIRST (delta-bearing buckets only), then the
+    * tombstone filter when `tombstoneWatermark` is given (the resolved
+    * winner may be a tombstone — the key must drop, not fall back to a
+    * stale base row). Size-adaptive single-task plan (same rule as the
+    * merge kernel's MergeConfig.singleTaskRows): when the manifest stats
+    * say the files fit one task, coalesce BELOW the resolution window so
+    * the whole fold+filter+sort+write is one exchange-free stage instead
+    * of a 2-3 stage job — a maintenance cycle over trickle-sized buckets
+    * is scheduling-floor-bound, not data-bound. A larger compaction
+    * spreads over one task per touched bucket; a rebucket never
+    * repartitions (each old bucket splits locally, see [[rebucket]]).
+    */
+  private def rewrite(spark: SparkSession, table: LakeTable, m: Manifest,
+      files: Seq[FileEntry], numBuckets: Int,
+      tombstoneWatermark: Option[Long]): CompactionResult = {
+    val touched = files.map(_.bucket).toSet
+    val singleTask = files.map(_.rows).sum <= LakeTable.SingleTaskRows
+    val resolved = table.scanResolved(spark, LakeTable.storedSchema(m.schema),
+      files, singlePartition = singleTask)
+    val kept = tombstoneWatermark.fold(resolved)(wm =>
+      resolved.filter(!col(LakeTable.TOMBSTONE) || col("lsn") > wm))
+    // footer stats of the staged files come back with the write — exact,
+    // driver-side; no second read of the rewritten output
+    val newFiles =
+      if (files.isEmpty) Nil
+      else table.writeBuckets(kept, m.version + 1, numBuckets) { bucketed =>
+        if (singleTask || numBuckets != m.numBuckets) bucketed
+        else bucketed.repartition(touched.size, col("_bucket"))
+      }
+    val next = table.nextSnapshot(Some(m), m.schemaJson, numBuckets, touched,
+      newFiles, m.ledger, m.floorBatch)
+    table.commit(next)
+    CompactionResult(next.snapshotId, next.version, m.manifests.map(_.nFiles).sum,
+      next.manifests.map(_.nFiles).sum, tombstoneWatermark.exists(_ > Long.MinValue))
   }
 
   /** The `n` buckets that most need compaction: highest file count first

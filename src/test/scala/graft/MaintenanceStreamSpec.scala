@@ -5,6 +5,7 @@ import graft.merge.{MergeConfig, MergeInto}
 import graft.model.{ChangeEvent, Ops}
 import graft.streaming.StreamOps
 import graft.table.{LakeTable, Maintenance}
+import graft.tools.WritePlans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
@@ -62,6 +63,32 @@ class MaintenanceSpec extends SparkSpec {
     // straggler below the delete must stay fenced after compaction
     MergeInto.apply(spark, table, batchDf(Seq(ev(7, Ops.Update, Array(7)))), "cp", 1, cfg)
     assert(table.read(spark).count() === 0)
+  }
+
+  test("single-task compaction over delta-bearing buckets writes an exchange-free plan") {
+    val table = LakeTable(tmpDir("lake-compact-plan"))
+    val cfg = MergeConfig(numBuckets = 4, deltaAppendThreshold = 1000L)
+    def ev(lsn: Long, key: String, op: String, tok: Array[Int]) =
+      RawEvent(lsn, key, op, tok, tok.length, "s", null, 0)
+    MergeInto.apply(spark, table, batchDf(
+      (0 until 40).map(i => ev(1, s"c$i", Ops.Insert, Array(i)))), "cp", 0, cfg)
+    MergeInto.apply(spark, table, batchDf(
+      (0 until 40 by 3).map(i => ev(2, s"c$i", Ops.Upsert, Array(-i)))), "cp", 1, cfg)
+    assert(table.filesOf(table.currentManifest()).exists(_.isDelta))
+    val state = table.read(spark).collect().map(_.toSeq).toSet
+    // the plan compact actually wrote, matched by its staging dir: the
+    // delta buckets' LWW window runs under the single-task coalesce, so
+    // fold + filter + sort + write need no Exchange
+    val plans = new WritePlans
+    spark.listenerManager.register(plans)
+    try {
+      val res = Maintenance.compact(spark, table)
+      val plan = plans.await(table.stagingDir(res.version))
+      assert(plan.contains("Window"), s"expected the delta resolution window in:\n$plan")
+      assert(!plan.contains("Exchange"), s"unexpected Exchange in:\n$plan")
+    } finally spark.listenerManager.unregister(plans)
+    assert(!table.filesOf(table.currentManifest()).exists(_.isDelta))
+    assert(table.read(spark).collect().map(_.toSeq).toSet === state)
   }
 
   test("vacuum removes files of superseded snapshots only") {

@@ -5,6 +5,7 @@ import graft.merge.{MergeConfig, MergeInto}
 import graft.model.Ops
 import graft.stream.{CdcStream, StreamConfig}
 import graft.table.{LakeTable, Maintenance}
+import graft.tools.WritePlans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -76,16 +77,16 @@ class RebucketSpec extends SparkSpec {
     val cfg = MergeConfig(numBuckets = 4)
     MergeInto.apply(spark, t,
       batchDf((0 until 40).map(i => ev(1, s"p$i", Ops.Insert, Array(i)))), "cp", 0, cfg)
-    val m = t.currentManifest()
-    val stored = LakeTable.storedSchema(m.schema)
-    // the exact frame rebucket writes (before the insertion sink):
-    // per-task local split — any Exchange here would shuffle the whole
-    // table for a partition-local operation
-    val frame = t.scanResolved(spark, stored, t.filesOf(m))
-      .withColumn("_bucket", pmod(xxhash64(col("doc_id")), lit(8L)).cast("int"))
-      .sortWithinPartitions(col("_bucket"), col("doc_id"))
-    val plan = frame.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"rebucket plan must be shuffle-free:\n$plan")
+    // the plan rebucket actually wrote, delivered by the listener bus and
+    // matched by its staging dir: a per-task local split — any Exchange
+    // here would shuffle the whole table for a partition-local operation
+    val plans = new WritePlans
+    spark.listenerManager.register(plans)
+    try {
+      val res = Maintenance.rebucket(spark, t, 8)
+      val plan = plans.await(t.stagingDir(res.version))
+      assert(!plan.contains("Exchange"), s"rebucket plan must be shuffle-free:\n$plan")
+    } finally spark.listenerManager.unregister(plans)
   }
 
   test("tombstone fencing and the exactly-once ledger survive a rebucket") {

@@ -46,12 +46,21 @@ class RobustnessSpec extends SparkSpec {
     val table = LakeTable(s"$work/t")
     val cfg = MergeConfig(numBuckets = 4, deadLetterDir = Some(s"$work/dlq"))
     MergeInto.apply(spark, table, batchDf(Seq(ev(1, "a", Ops.Insert, Array(1)))), "cp", 0, cfg)
+    val parent = table.currentManifest()
+    def manifestFiles(): Set[String] =
+      new java.io.File(s"$work/t/meta").list().filter(_.startsWith("m-")).toSet
+    val filesBefore = manifestFiles()
     val allBad = Seq((9L, null.asInstanceOf[String], "U", Seq(9), 1, "s"))
       .toDF("lsn", "doc_id", "op", "tokens", "n_tok", "source")
     val r = MergeInto.apply(spark, table, allBad, "cp", 1, cfg)
     assert(!r.skipped && r.lineage.isEmpty)
     assert(table.read(spark).count() === 1)
-    assert(table.committedSnapshot("cp", 1L).isDefined)
+    val head = table.currentManifest()
+    assert(head.committedSnapshot("cp", 1L).isDefined)
+    // a ledger-only commit carries the parent's manifest list by
+    // reference and writes no manifest file
+    assert(head.manifests.map(_.path) === parent.manifests.map(_.path))
+    assert(manifestFiles() === filesBefore)
   }
 
   test("lost CAS race: merge retries against the winner's snapshot") {

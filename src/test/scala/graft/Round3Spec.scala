@@ -129,13 +129,13 @@ class IncrementalCompactSpec extends SparkSpec {
       RawEvent(1L, "a", Ops.Insert, Array(1), 1, "s", null, 0))),
       "cp", 0L, MergeConfig(numBuckets = 4))
     // merge rewrites whole buckets (1 file/bucket), so synthesize a
-    // fragmented manifest: duplicate one bucket's file entry (written
-    // legacy-inline, which also exercises the pre-list interop path)
+    // fragmented manifest: a second entry in one bucket, added to its
+    // range through the manifest list
     val m = table.currentManifest()
-    val fs0 = table.filesOf(m)
-    val f = fs0.head
+    val f = table.filesOf(m).head
     table.commit(m.copy(version = m.version + 1,
-      files = fs0 :+ f.copy(path = f.path + ".dup"), manifests = Nil))
+      manifests = table.composeManifests(Some(m), Set.empty,
+        Seq(f.copy(path = f.path + ".dup")), m.numBuckets)))
     assert(Maintenance.mostFragmented(table, 4) === Set(f.bucket))
     assert(Maintenance.mostFragmented(table, 0) === Set.empty)
   }

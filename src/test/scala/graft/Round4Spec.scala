@@ -160,11 +160,10 @@ class DeadLetterDirSpec extends SparkSpec {
 /** Manifest list (the round-4 metadata scale path): a commit touching one
   * bucket rewrites ONLY that bucket range's manifest file plus the head —
   * asserted at the FILE level — untouched ranges carry over by reference,
-  * readers prune at the list level, and pre-list (inline) snapshots stay
-  * readable and migrate on their first commit.
+  * and readers prune at the list level.
   */
 class ManifestListSpec extends SparkSpec {
-  import graft.table.{LakeTable, Maintenance, Manifest}
+  import graft.table.{LakeTable, Maintenance}
   import spark.implicits._
 
   private def batchDf(events: Seq[RawEvent]): DataFrame =
@@ -206,7 +205,7 @@ class ManifestListSpec extends SparkSpec {
     MergeInto.apply(spark, table,
       batchDf((1 to 40).map(i => ev(i.toLong, s"k$i"))), "cp", 0L, cfg)
     val m0 = table.currentManifest()
-    assert(m0.files.isEmpty && m0.manifests.nonEmpty, "head must be list-based")
+    assert(m0.manifests.nonEmpty, "head must be list-based")
     val before = metaManifestFiles(root)
     val refsBefore = m0.manifests.map(r => r.range -> r.path).toMap
     assert(refsBefore.size >= 3, s"need several populated ranges, got $refsBefore")
@@ -234,30 +233,6 @@ class ManifestListSpec extends SparkSpec {
     assert(full.size === 40)
     // time travel across list-based snapshots still works
     assert(table.readVersion(spark, m0.version).count() === 40)
-  }
-
-  test("legacy inline-files snapshots read and migrate on first commit") {
-    val work = tmpDir("mlist-legacy")
-    val root = s"$work/t"
-    val table = LakeTable(root)
-    val cfg = MergeConfig(numBuckets = 4)
-    MergeInto.apply(spark, table,
-      batchDf((1 to 10).map(i => ev(i.toLong, s"k$i"))), "cp", 0L, cfg)
-    // rewrite the head as a LEGACY manifest (inline files, no list)
-    val m = table.currentManifest()
-    table.commit(m.copy(version = m.version + 1, snapshotId = "legacy",
-      files = table.filesOf(m), manifests = Nil))
-    val legacy = table.currentManifest()
-    assert(legacy.manifests.isEmpty && legacy.files.nonEmpty)
-    val state = table.read(spark).collect().map(_.toSeq).toSet
-    assert(state.size === 10)
-    // a commit on top migrates to ranges without losing state
-    MergeInto.apply(spark, table, batchDf(Seq(ev(99L, "k1"))), "cp", 1L, cfg)
-    val migrated = table.currentManifest()
-    assert(migrated.files.isEmpty && migrated.manifests.nonEmpty)
-    assert(table.read(spark).count() === 10)
-    assert(table.read(spark).filter(col("doc_id") === "k1")
-      .head().getAs[Long]("lsn") === 99L)
   }
 
   test("vacuum GCs superseded manifest files but never unreferenced (in-flight) ones") {
@@ -375,7 +350,7 @@ class ManifestListPropertySpec extends SparkSpec {
           newFiles.groupBy(_.bucket).view.mapValues(_.toSeq).toMap
         val m = graft.table.Manifest(step.toLong, s"s$step",
           parent.map(_.snapshotId), graft.model.Schemas.seqTable.json,
-          numBuckets, Nil, Map.empty, Map.empty, refs)
+          numBuckets, Map.empty, Map.empty, refs)
         table.commit(m)
         parent = Some(m)
         // resolved listing == oracle, overall and per pruned bucket subset
